@@ -20,7 +20,7 @@ The ledger also records the RUN PARAMETERS that make bucket ids meaningful:
 ``n_buckets`` (bucket = pmod(xxhash64(conv_id), n_buckets)) and an optional
 caller-supplied ``input_fp`` fingerprint. Resuming a run_id with different
 parameters would silently skip buckets that now map to different
-conversations — so ``done_buckets`` FAILS FAST on any mismatch.
+conversations — so ``bucket_state`` FAILS FAST on any mismatch.
 
 The checksum is ORDER-INSENSITIVE and overflow-free:
 ``bit_xor(xxhash64(conv_id, turn_idx, sha2(extracted_text, 256)))`` over the
@@ -32,7 +32,7 @@ to the driver; no data rows ever leave executors).
 
 from __future__ import annotations
 
-from typing import Dict, FrozenSet, List, Optional
+from typing import Dict, FrozenSet, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -113,17 +113,8 @@ class Ledger:
             "exhausted": frozenset(exhausted),
         }
 
-    def done_buckets(self) -> FrozenSet[int]:
-        return self.bucket_state()["done"]
-
-    def attempt_of(self, bucket: int) -> int:
-        """Highest recorded attempt number for a bucket (0 if never tried)."""
-        rows = self._run_rows()
-        return max((r["attempt"] or 0 for r in rows if r["bucket"] == bucket), default=0)
-
     def attempts(self) -> Dict[int, int]:
-        """Highest recorded attempt number PER bucket — one ledger read
-        (attempt_of in a loop would re-read the ledger per bucket)."""
+        """Highest recorded attempt number per bucket — one ledger read."""
         rows = self._run_rows()
         out: Dict[int, int] = {}
         for r in rows:
@@ -132,21 +123,9 @@ class Ledger:
 
     @staticmethod
     def bucket_stats(written: DataFrame) -> List[Dict]:
-        """Per-bucket n_turns + order-insensitive checksum of written rows."""
-        rows = (
-            written.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.bit_xor(
-                    F.xxhash64("conv_id", "turn_idx", F.sha2(F.col("extracted_text"), 256))
-                ).alias("checksum"),
-            )
-            .collect()  # ≤ buckets-per-wave rows
-        )
-        return [
-            {"bucket": int(r["bucket"]), "n_turns": int(r["n_turns"]), "checksum": int(r["checksum"])}
-            for r in rows
-        ]
+        """Per-bucket n_turns + order-insensitive checksum of written rows
+        (the bucket half of ``wave_stats``)."""
+        return wave_stats(written)[0]
 
     def _append(self, tuples: List[tuple]) -> None:
         df = self.io.spark.createDataFrame(tuples, LEDGER_SCHEMA).withColumn(
@@ -177,7 +156,46 @@ class Ledger:
             ]
         )
 
-    def read(self) -> DataFrame:
-        # mergeSchema for the same reason as _run_rows: ledger dirs may mix
-        # pre-r2 and current file schemas
-        return self.io.read(LEDGER_TABLE, merge_schema=True)
+
+ROUTE_METRICS = ("route", "n_turns", "n_ok", "n_partial", "n_failed",
+                 "avg_quality", "p95_extract_ms")
+
+
+def wave_stats(written: DataFrame) -> Tuple[List[Dict], List[Dict], DataFrame]:
+    """Lineage and route metrics of written rows from ONE aggregation.
+
+    ``GROUPING SETS ((bucket), (route))``: the bucket rows carry n_turns and
+    the checksum the ledger certifies, the route rows carry the ``metrics``
+    counters (reference stats, app/routers/stats.py:57-260). The row hash is
+    projected before the Expand, so sha2 runs once per row, not once per
+    grouping set. Returns ``(bucket_rows, route_rows, aggregate)``; the
+    aggregate has been executed, so its plan metrics are populated for
+    ``observe.op_metrics_rows``.
+    """
+    by_bucket = F.grouping("route") == 1
+    status = F.col("status")
+    agg = (
+        written.select(
+            "bucket", "route", "status", "quality_score", "extract_ms",
+            F.xxhash64("conv_id", "turn_idx", F.sha2(F.col("extracted_text"), 256)).alias("row_hash"),
+        )
+        .groupingSets([["bucket"], ["route"]], "bucket", "route")
+        .agg(
+            by_bucket.alias("by_bucket"),
+            F.count("*").alias("n_turns"),
+            F.bit_xor("row_hash").alias("checksum"),
+            F.count_if(status == "ok").alias("n_ok"),
+            F.count_if(status == "partial").alias("n_partial"),
+            F.count_if(status == "failed").alias("n_failed"),
+            F.avg("quality_score").alias("avg_quality"),
+            # the one aggregate whose state grows with its input: route rows only
+            F.percentile_approx(F.when(~by_bucket, F.col("extract_ms")), 0.95).alias("p95_extract_ms"),
+        )
+    )
+    rows = agg.collect()  # ≤ buckets-per-wave + routes rows
+    buckets = [
+        {"bucket": int(r["bucket"]), "n_turns": int(r["n_turns"]), "checksum": int(r["checksum"])}
+        for r in rows if r["by_bucket"]
+    ]
+    routes = [{k: r[k] for k in ROUTE_METRICS} for r in rows if not r["by_bucket"]]
+    return buckets, routes, agg

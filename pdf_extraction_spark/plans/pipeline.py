@@ -14,9 +14,10 @@ Stages (SURVEY.md §7):
      batch yields status='failed' rows instead of killing tasks (reference
      PartialExtractionError semantics, app/services/pdf_extractor.py:588-633).
   5. wave commit        — buckets are processed in bounded waves; each wave
-     writes data partitions (dynamic overwrite → idempotent re-run) and then
-     appends its lineage rows. A crash between waves loses at most one
-     uncommitted wave; resume re-runs only missing buckets.
+     writes data partitions (dynamic overwrite → idempotent re-run), reads
+     them back ONCE, and appends its lineage rows (the commit point), its
+     ``metrics`` rows and its ``op_metrics`` rows. A crash between waves
+     loses at most one uncommitted wave; resume re-runs only missing buckets.
      DEFAULT n_waves=1: each wave is a full input scan when the input is not
      bucket-partitioned (the bucket filter can't push down a computed
      column), so multi-wave commit is only worth it when (a) the input IS
@@ -24,12 +25,14 @@ Stages (SURVEY.md §7):
      manifest level — or (b) the run is long enough that losing a whole run
      to a cluster failure costs more than the extra scans. Within one wave,
      Spark task retries already absorb transient failures.
-  6. metrics            — one groupBy aggregation per run (replaces the
-     reference's row-at-a-time batch_jobs counters,
-     app/db/batch_jobs.py:86-183).
+  6. wave stats         — the read-back is one GROUPING SETS aggregation
+     (``checkpoint.wave_stats``): bucket rows feed the ledger, route rows
+     the per-wave ``metrics`` table (replaces the reference's row-at-a-time
+     batch_jobs counters, app/db/batch_jobs.py:86-183).
 
 Scale notes (100 TB / 10^12 turns): no driver-side data movement — the only
-collect is the ledger's bucket-status list (≤ n_buckets rows of metadata).
+collects are the ledger's bucket-status list (≤ n_buckets rows of metadata)
+and each wave's stats (≤ buckets-per-wave + routes rows).
 The extraction stage is map-only (no shuffle beyond the explicit
 repartition, which doubles as the write-partitioning). Output is
 bucket-partitioned so downstream conv_id joins/groupBys can pre-prune.
@@ -45,7 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.core.extractor import extract_turn
-from pdf_extraction_spark.plans.checkpoint import Ledger
+from pdf_extraction_spark.plans.checkpoint import MAX_ATTEMPTS, ROUTE_METRICS, Ledger, wave_stats
+from pdf_extraction_spark.plans.observe import OP_METRICS_SCHEMA, op_metrics_rows
+from pdf_extraction_spark.plans.review_queue import enqueue_buckets
 from pdf_extraction_spark.sources.tables import TableIO
 
 SPANS_TYPE = (
@@ -58,6 +63,11 @@ EXTRACTED_SCHEMA = (
     f"extracted_text string, spans {SPANS_TYPE}, quality_score double, "
     "doc_kind string, classify_method string, route string, status string, "
     "error string, extract_ms double"
+)
+
+METRICS_SCHEMA = (
+    "run_id string, route string, n_turns bigint, n_ok bigint, n_partial bigint, n_failed bigint, "
+    "avg_quality double, p95_extract_ms double, throughput_turns_per_sec double"
 )
 
 _PASS_COLS = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -143,9 +153,15 @@ def run_extraction(
     (e.g. an Iceberg snapshot id). Stamped into the ledger; resuming the
     same run_id with a different fingerprint — or a different n_buckets —
     fails fast instead of silently skipping re-mapped buckets.
+
+    Raises ``ValueError`` before touching the ledger if ``n_buckets``,
+    ``salt_turns``, ``n_waves`` or a given ``partitions`` is below 1.
     """
-    from pdf_extraction_spark.plans.checkpoint import MAX_ATTEMPTS
-    from pdf_extraction_spark.plans.review_queue import enqueue_buckets
+    bounds = {"n_buckets": n_buckets, "salt_turns": salt_turns, "n_waves": n_waves,
+              "partitions": 1 if partitions is None else partitions}
+    bad = {k: v for k, v in bounds.items() if v < 1}
+    if bad:
+        raise ValueError(f"run_extraction parameters must be >= 1, got {bad}")
 
     io = TableIO(spark, out_root)
     ledger = Ledger(io, run_id, n_buckets=n_buckets, input_fp=input_fp)
@@ -167,15 +183,15 @@ def run_extraction(
                 "buckets_failed": 0, "buckets_escalated": n_escalated,
                 "n_turns": 0, "elapsed_s": 0.0, "resumed": True}
 
-    partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if partitions is None:
+        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     total_turns = 0
     failed_buckets: List[int] = []
     ran_buckets: List[int] = []
     waves = [todo[i::n_waves] for i in range(min(n_waves, len(todo)))]
     for wave in waves:
-        if not wave:
-            continue
-        wave_df = df.filter(F.col("bucket").isin([int(b) for b in wave]))
+        t_wave = time.monotonic()
+        wave_df = df.filter(F.col("bucket").isin(wave))
         if repartition_input:
             # explicit (bucket, salt) repartition: balances whale
             # conversations across tasks and clusters the write. Disable
@@ -198,7 +214,7 @@ def run_extraction(
             # at ITS OWN attempt 1, not inherit the wave maximum (which
             # would silently escalate it on its first failure)
             prior = ledger.attempts()
-            per_bucket = {int(b): prior.get(int(b), 0) + 1 for b in wave}
+            per_bucket = {b: prior.get(b, 0) + 1 for b in wave}
             for att in sorted(set(per_bucket.values())):
                 ledger.mark_failed(
                     [b for b, a in per_bucket.items() if a == att], att
@@ -211,21 +227,29 @@ def run_extraction(
                 n_escalated += enqueue_buckets(io, run_id, exhausted_now)
             continue
 
-        # lineage rows are computed FROM WHAT WAS WRITTEN — the ledger
-        # certifies on-disk state, not in-flight state.
-        written = io.read("extracted").filter(F.col("bucket").isin([int(b) for b in wave]))
-        stats = ledger.bucket_stats(written)
+        # lineage and metrics rows are computed FROM WHAT WAS WRITTEN — the
+        # ledger certifies on-disk state, not in-flight state — in one read.
+        written = io.read("extracted").filter(F.col("bucket").isin(wave))
+        stats, routes, executed = wave_stats(written)
         # buckets with zero input rows still count as done (else they re-run
         # on every resume forever)
         nonempty = {s["bucket"] for s in stats}
-        stats += [{"bucket": int(b), "n_turns": 0, "checksum": 0}
-                  for b in wave if int(b) not in nonempty]
-        total_turns += sum(s["n_turns"] for s in stats)
+        stats += [{"bucket": b, "n_turns": 0, "checksum": 0}
+                  for b in wave if b not in nonempty]
+        wave_turns = sum(s["n_turns"] for s in stats)
         ledger.mark_done(stats)
-        ran_buckets.extend(int(b) for b in wave)
+        total_turns += wave_turns
+        ran_buckets.extend(wave)
+
+        # per-wave metrics, written right after the commit so a resumed run
+        # never loses the rows of waves an earlier invocation committed
+        tps = wave_turns / max(time.monotonic() - t_wave, 1e-9)
+        metrics = [(run_id, *(r[c] for c in ROUTE_METRICS), tps) for r in routes]
+        io.write(spark.createDataFrame(metrics, METRICS_SCHEMA), "metrics", mode="append")
+        io.write(spark.createDataFrame(op_metrics_rows(executed, run_id, stage="run_metrics"),
+                                       OP_METRICS_SCHEMA), "op_metrics", mode="append")
 
     elapsed = time.monotonic() - t0
-    _write_metrics(io, run_id, elapsed, buckets=ran_buckets, n_turns_run=total_turns)
     return {
         "run_id": run_id,
         "buckets_done": len(done),
@@ -236,50 +260,6 @@ def run_extraction(
         "elapsed_s": round(elapsed, 3),
         "resumed": bool(done),
     }
-
-
-def _write_metrics(io: TableIO, run_id: str, elapsed_s: float,
-                   buckets: Optional[List[int]] = None,
-                   n_turns_run: int = 0) -> None:
-    """Per-run metrics table (FIXTURES.md §4; reference stats A3-A6,
-    app/routers/stats.py:57-260 + app/db/batch_jobs.py:127-183 collapsed
-    into one groupBy). Scoped to THE BUCKETS THIS INVOCATION PROCESSED —
-    a resumed run (or a shared warehouse) must not claim the whole table's
-    rows under its own run_id, and throughput divides the turns THIS run
-    produced by THIS run's elapsed time."""
-    if not buckets:
-        return
-    extracted = io.read("extracted").filter(F.col("bucket").isin([int(b) for b in buckets]))
-    tps = n_turns_run / max(elapsed_s, 1e-9)
-    metrics = (
-        extracted.groupBy("route")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
-            F.sum(F.when(F.col("status") == "partial", 1).otherwise(0)).alias("n_partial"),
-            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("n_failed"),
-            F.avg("quality_score").alias("avg_quality"),
-            F.percentile_approx("extract_ms", 0.95).alias("p95_extract_ms"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("throughput_turns_per_sec", F.lit(float(tps)))
-        .select("run_id", "route", "n_turns", "n_ok", "n_partial", "n_failed",
-                "avg_quality", "p95_extract_ms", "throughput_turns_per_sec")
-    )
-    # collect (route-grain, metadata-sized) instead of writing the lazy
-    # aggregate: ONE execution both yields the metrics rows and populates
-    # the executed plan, whose per-operator numbers (rows scanned, shuffle
-    # bytes, spill, peak memory) are appended as the op_metrics table —
-    # the operator-grain stats the reference keeps per batch job
-    # (app/db/batch_jobs.py:127-183). A write would run its own
-    # QueryExecution and leave these at zero.
-    from pdf_extraction_spark.plans.observe import OP_METRICS_SCHEMA, op_metrics_rows
-
-    rows = metrics.collect()
-    io.write(io.spark.createDataFrame(rows, metrics.schema), "metrics", mode="append")
-    op_rows = op_metrics_rows(metrics, run_id, stage="run_metrics")
-    io.write(io.spark.createDataFrame(op_rows, OP_METRICS_SCHEMA),
-             "op_metrics", mode="append")
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

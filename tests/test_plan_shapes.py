@@ -192,10 +192,12 @@ def test_no_per_row_python_udfs_in_codebase():
             offenders.append(str(p))
         if ".collect()" in src and p.name not in (
             "checkpoint.py", "similarity.py", "review_queue.py", "dedup.py",
-            "maintenance.py", "curation.py", "semdedup.py", "pipeline.py",
-            "incremental.py",
+            "maintenance.py", "curation.py", "semdedup.py", "incremental.py",
         ):
-            # allowed: checkpoint.py (≤ n_buckets ledger rows),
+            # allowed: checkpoint.py (≤ n_buckets ledger rows, and per
+            # wave the bucket + route rows of wave_stats, collected so ONE
+            # execution feeds the ledger, the metrics write and the
+            # op_metrics executed-plan capture),
             # similarity.py (k×dim IVF centroid matrix + 1 query vector),
             # review_queue.py (already-enqueued bucket-id dedup set),
             # dedup.py (_edge_sig: ONE (count, xor) scalar pair per
@@ -205,9 +207,6 @@ def test_no_per_row_python_udfs_in_codebase():
             # curation.py (per-stage scalar counts + the ≤3-row split mix),
             # semdedup.py (SEM_K×dim centroid rows — same class as the IVF
             # centroid matrix),
-            # pipeline.py (_write_metrics: route-grain metrics rows,
-            # collected so ONE execution feeds both the metrics write and
-            # the op_metrics executed-plan capture),
             # incremental.py (one-row batch-summary aggregate per ingest +
             # the one-scalar total-count compaction check) —
             # all metadata-sized driver state, never data rows

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark import fixtures
 from pdf_extraction_spark.plans.checkpoint import Ledger
-from pdf_extraction_spark.plans.pipeline import run_extraction
+from pdf_extraction_spark.plans.pipeline import read_extracted, run_extraction
 from pdf_extraction_spark.sources.tables import TableIO
 
 
@@ -103,3 +103,96 @@ def test_whale_conversation_is_salted(spark, tmp_path):
     )
     n_parts = salted.select("pid").distinct().count()
     assert n_parts >= 3  # 500 turns / salt grain 100 → ≥5 salt groups; hashing may collide a little
+
+
+def _count_extracted_reads(monkeypatch):
+    """Wrap TableIO.read; returns the list that records each read of the
+    ``extracted`` table."""
+    reads = []
+    real = TableIO.read
+
+    def read(self, name, merge_schema=False):
+        if name == "extracted":
+            reads.append(name)
+        return real(self, name, merge_schema)
+
+    monkeypatch.setattr(TableIO, "read", read)
+    return reads
+
+
+def _lineage_turns(spark, root, run_id):
+    led = TableIO(spark, root).read("lineage")
+    return led.filter((F.col("run_id") == run_id) & (F.col("status") == "done")) \
+        .agg(F.sum("n_turns")).first()[0]
+
+
+def test_metrics_table_contents(spark, small_transcripts, tmp_path, monkeypatch):
+    """n_waves=1: one metrics row per route whose status counters add up,
+    whose turn counts match the summary and the ledger, and whose mean
+    quality is a score; ``extracted`` is read back exactly once."""
+    root = str(tmp_path / "w")
+    reads = _count_extracted_reads(monkeypatch)
+    s = run_extraction(spark, small_transcripts, root, run_id="r1", n_buckets=8)
+    assert len(reads) == 1
+
+    met = TableIO(spark, root).read("metrics").toPandas()
+    assert set(met["run_id"]) == {"r1"}
+    assert sorted(met["route"]) == sorted(
+        r["route"] for r in read_extracted(spark, root).select("route").distinct().collect())
+    assert (met["n_ok"] + met["n_partial"] + met["n_failed"] == met["n_turns"]).all()
+    assert met["n_turns"].sum() == s["n_turns"] == _lineage_turns(spark, root, "r1")
+    assert s["n_turns"] == small_transcripts.count()
+    assert ((met["avg_quality"] >= 0) & (met["avg_quality"] <= 1)).all()
+
+
+def test_crash_between_waves_keeps_committed_metrics(spark, small_transcripts, tmp_path, monkeypatch):
+    """A run that dies after wave 1 of 2 committed must leave that
+    wave's metrics rows behind: after resume, the run's metrics cover every
+    input turn exactly once, like its lineage. Each committed wave reads
+    ``extracted`` back exactly once."""
+    import pdf_extraction_spark.plans.pipeline as pl
+
+    root = str(tmp_path / "w")
+    real = pl.extract_stage
+    calls = []
+
+    def dies_on_second_wave(df):
+        calls.append(1)
+        if len(calls) == 2:
+            raise KeyboardInterrupt  # not an Exception: escapes the wave handler
+        return real(df)
+
+    reads = _count_extracted_reads(monkeypatch)
+    monkeypatch.setattr(pl, "extract_stage", dies_on_second_wave)
+    with pytest.raises(KeyboardInterrupt):
+        run_extraction(spark, small_transcripts, root, run_id="r", n_buckets=4, n_waves=2)
+    assert len(reads) == 1
+
+    monkeypatch.setattr(pl, "extract_stage", real)
+    s = run_extraction(spark, small_transcripts, root, run_id="r", n_buckets=4, n_waves=2)
+    assert s["resumed"] and s["buckets_run"] == 2
+
+    met = TableIO(spark, root).read("metrics").filter(F.col("run_id") == "r")
+    n_metrics = met.agg(F.sum("n_turns")).first()[0]
+    assert n_metrics == small_transcripts.count() == _lineage_turns(spark, root, "r")
+    assert len(reads) == 3  # the resume committed two one-bucket waves
+
+
+_ONE_BOUNDS = ["n_buckets", "salt_turns", "n_waves", "partitions"]
+
+
+@pytest.mark.parametrize("param", _ONE_BOUNDS)
+def test_parameter_below_one_raises_before_ledger(spark, small_transcripts, tmp_path, param):
+    root = str(tmp_path / "w")
+    with pytest.raises(ValueError, match=param):
+        run_extraction(spark, small_transcripts, root, run_id="r", **{param: 0})
+    assert not (tmp_path / "w" / "lineage").exists()
+
+
+@pytest.mark.parametrize("param", _ONE_BOUNDS)
+def test_parameter_at_one_runs(spark, tmp_path, param):
+    df = spark.createDataFrame(fixtures.transcripts_pandas(n_convs=3, whale_every=100, whale_len=5))
+    root = str(tmp_path / "w")
+    s = run_extraction(spark, df, root, run_id="r", **{"n_buckets": 4, param: 1})
+    assert s["n_turns"] == df.count()
+    assert _lineage_turns(spark, root, "r") == df.count()
