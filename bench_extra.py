@@ -7,6 +7,7 @@ Usage:
   python bench_extra.py q1 q2 ...            # time the named queries
   python bench_extra.py --all                # time every HEADLINE query
   python bench_extra.py --plans q1 q2 ...    # also write plans/r07/<q>_<tag>.txt
+  python bench_extra.py --task-overhead [N]  # seconds per Python task (N tasks, default 16)
   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS,
        BENCH_EXTRA_TRIALS (default 2), BENCH_EXTRA_TAG (plan-file suffix,
        default "before").
@@ -14,6 +15,11 @@ Usage:
 Timing methodology matches bench.py exactly: build_session(local[cpus],
 shuffle_partitions=4*cpus), per-trial release_caches() via the
 __spark_entry__.queries() wrapper, _force = df.count(), best-of-N.
+
+``--task-overhead`` times a no-op N-task ``mapInPandas`` into the noop sink
+against the same stage without Python, and reports the difference per
+Python task (wall difference × task slots ÷ N; medians over the trials):
+the fixed cost every Python task pays before it does any work.
 """
 
 from __future__ import annotations
@@ -24,6 +30,25 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def task_overhead(spark, n_tasks: int, trials: int) -> dict:
+    def run(python: bool) -> float:
+        df = spark.range(0, n_tasks, 1, n_tasks)
+        if python:
+            df = df.mapInPandas(lambda batches: batches, "id long")
+        t0 = time.monotonic()
+        df.write.format("noop").mode("overwrite").save()
+        return time.monotonic() - t0
+
+    run(True)  # start the Python workers
+    py = sorted(run(True) for _ in range(trials))
+    jvm = sorted(run(False) for _ in range(trials))
+    slots = min(n_tasks, spark.sparkContext.defaultParallelism)
+    diff = py[trials // 2] - jvm[trials // 2]
+    return {"n_tasks": n_tasks, "slots": slots,
+            "python_s": [round(t, 3) for t in py], "jvm_s": [round(t, 3) for t in jvm],
+            "s_per_python_task": round(diff * slots / n_tasks, 4)}
 
 
 def main() -> None:
@@ -42,6 +67,11 @@ def main() -> None:
 
     spark = build_session(app_name="bench_extra", master=f"local[{cpus}]",
                           shuffle_partitions=4 * cpus)
+    if "--task-overhead" in sys.argv[1:]:
+        n_tasks = int(args[0]) if args else 16
+        print(json.dumps({"cpus": cpus, "task_overhead": task_overhead(spark, n_tasks, max(trials, 5))}))
+        spark.stop()
+        return
 
     import __spark_entry__ as entrymod
 

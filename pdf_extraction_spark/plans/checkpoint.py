@@ -37,7 +37,7 @@ from typing import Dict, FrozenSet, List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.sources.tables import TableIO
+from pdf_extraction_spark.sources.tables import TableIO, metadata_frame
 
 LEDGER_TABLE = "lineage"
 MAX_ATTEMPTS = 5  # reference app/utils/retry.py:37-39 (max_retries=5)
@@ -128,7 +128,7 @@ class Ledger:
         return wave_stats(written)[0]
 
     def _append(self, tuples: List[tuple]) -> None:
-        df = self.io.spark.createDataFrame(tuples, LEDGER_SCHEMA).withColumn(
+        df = metadata_frame(self.io.spark, tuples, LEDGER_SCHEMA).withColumn(
             "ts", F.current_timestamp()
         )
         self.io.write(df, LEDGER_TABLE, mode="append")

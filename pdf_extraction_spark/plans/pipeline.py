@@ -51,7 +51,7 @@ from pdf_extraction_spark.core.extractor import extract_turn
 from pdf_extraction_spark.plans.checkpoint import MAX_ATTEMPTS, ROUTE_METRICS, Ledger, wave_stats
 from pdf_extraction_spark.plans.observe import OP_METRICS_SCHEMA, op_metrics_rows
 from pdf_extraction_spark.plans.review_queue import enqueue_buckets
-from pdf_extraction_spark.sources.tables import TableIO
+from pdf_extraction_spark.sources.tables import TableIO, metadata_frame
 
 SPANS_TYPE = (
     "array<struct<span_idx:int,kind:string,text:string,page:int,"
@@ -245,9 +245,9 @@ def run_extraction(
         # never loses the rows of waves an earlier invocation committed
         tps = wave_turns / max(time.monotonic() - t_wave, 1e-9)
         metrics = [(run_id, *(r[c] for c in ROUTE_METRICS), tps) for r in routes]
-        io.write(spark.createDataFrame(metrics, METRICS_SCHEMA), "metrics", mode="append")
-        io.write(spark.createDataFrame(op_metrics_rows(executed, run_id, stage="run_metrics"),
-                                       OP_METRICS_SCHEMA), "op_metrics", mode="append")
+        io.write(metadata_frame(spark, metrics, METRICS_SCHEMA), "metrics", mode="append")
+        io.write(metadata_frame(spark, op_metrics_rows(executed, run_id, stage="run_metrics"),
+                                OP_METRICS_SCHEMA), "op_metrics", mode="append")
 
     elapsed = time.monotonic() - t0
     return {

@@ -35,7 +35,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.sources.tables import TableIO
+from pdf_extraction_spark.sources.tables import TableIO, metadata_frame
 
 REVIEW_TABLE = "review_queue"
 
@@ -69,7 +69,8 @@ def enqueue_buckets(io: TableIO, run_id: str, buckets: List[int],
     new = [b for b in new if b not in existing]
     if not new:
         return 0
-    df = io.spark.createDataFrame(
+    df = metadata_frame(
+        io.spark,
         [(f"bucket:{run_id}:{b}", "bucket", run_id, b, None, None, error_type, None)
          for b in new],
         REVIEW_SCHEMA,

@@ -17,9 +17,12 @@ app/db/extractions.py:98-104).
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from typing import List, Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -131,6 +134,18 @@ class TableIO:
         if os.path.isdir(self.path(name)):
             shutil.rmtree(self.path(name))
         os.rename(self.path(tmp), self.path(name))
+
+
+def metadata_frame(spark: SparkSession, rows: Sequence, ddl: str) -> DataFrame:
+    """Driver-side metadata rows (ledger, metrics, queue items) as a
+    one-partition DataFrame with exactly ``ddl``'s schema. The rows reach the
+    JVM as one Arrow table, so the plan is a ``LocalTableScan`` (no Python
+    task, NULLs kept); ``coalesce(1)`` makes an append write one file, not
+    ``defaultParallelism`` files. ``rows``: dicts, or tuples in ``ddl``
+    column order."""
+    schema = StructType.fromDDL(ddl)
+    rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))).coalesce(1)
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
